@@ -69,6 +69,12 @@ def connected_components(
     scale. Above the threshold the iterative min-label loop runs — that is
     the 10^12-row path.
 
+    The entity D-phase calls this only on its distributed path (vocabulary
+    above ``operators.dedup``'s pairwise threshold): for a small vocabulary
+    ``dedup.canonicalize_units`` runs ``union_find_local`` on the rows of
+    its own (norm, uid) probe, so neither the edge table nor this probe is
+    built.
+
     ``out_info`` (optional dict) reports {"driver_path": bool,
     "n_vertices": int|None} so callers can plan downstream joins — a
     driver-path component table is broadcast-sized by construction, letting

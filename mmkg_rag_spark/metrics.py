@@ -1,30 +1,52 @@
 """Per-stage lineage + metrics rows (north-rule ops requirement).
 
-Every materialized stage appends one row per output *data file* (file ↔
-write-task partition) to the catalog's ``_metrics`` table:
+Every materialized stage appends one row per non-empty output *data file*
+(file ↔ write-task partition) to the catalog's ``_metrics`` table:
 
-    (stage, snapshot, input_snapshot, file, rows, wall_ms, ts)
+    (stage, snapshot, input_snapshot, file, rows, rows_in, wall_ms, ts)
 
-File-level row counts come from ``input_file_name()`` grouping over the
-just-written snapshot — a metadata-cheap scan (count-only aggregate over
-parquet footers after AQE prunes columns). This is the explicit accounting
-the north star asks for beyond what the Spark UI provides, and it lives next
-to the data so a resumed run appends to the same history.
+``file`` is the data file's ``file:///…`` URI (the form
+``input_file_name()`` reports) and ``rows`` its row count, read from the
+parquet footer of the just-written snapshot (``ParquetCatalog.file_rows``).
+The rows are written with pyarrow, so the bookkeeping costs no Spark job and
+no re-scan. This is the explicit accounting the north star asks for beyond
+what the Spark UI provides, and it lives next to the data so a resumed run
+appends to the same history.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .sources.catalog import ParquetCatalog
 
-METRICS_SCHEMA = (
-    "stage string, snapshot string, input_snapshot string, file string, "
-    "rows long, rows_in long, wall_ms long, ts double"
-)
+
+def _lit_int(v: int) -> pa.DataType:
+    """The type ``F.lit(v)`` gives a Python int: int32 when it fits, else
+    int64. Earlier rows were written that way, and ``read_metrics``'s
+    schema merge cannot widen int32 to int64, so new rows keep the rule."""
+    return pa.int32() if -(2**31) <= v < 2**31 else pa.int64()
+
+
+def _metrics_schema(rows_in: int, wall_ms: int) -> pa.Schema:
+    return pa.schema(
+        [
+            ("stage", pa.string()),
+            ("snapshot", pa.string()),
+            ("input_snapshot", pa.string()),
+            ("file", pa.string()),
+            ("rows", pa.int64()),
+            ("rows_in", _lit_int(rows_in)),
+            ("wall_ms", _lit_int(wall_ms)),
+            ("ts", pa.float64()),
+        ]
+    )
 
 
 def record_stage(
@@ -35,38 +57,34 @@ def record_stage(
     data_path: str,
     wall_ms: int,
     rows_in: int = -1,
-) -> DataFrame:
-    """Append per-partition lineage rows for a just-written snapshot.
+) -> int:
+    """Append per-file lineage rows for a just-written snapshot; returns the
+    snapshot's total row count.
 
     ``rows_in`` is the upstream snapshot's row count (-1 when unknown, e.g.
     streaming micro-batches) — with per-file ``rows`` out, each stage's
     row fan-in/fan-out is auditable straight from the metrics table."""
-    spark = catalog.spark
-    per_file = (
-        spark.read.parquet(data_path)
-        .groupBy(F.input_file_name().alias("file"))
-        .agg(F.count(F.lit(1)).alias("rows"))
-        .select(
-            F.lit(stage).alias("stage"),
-            F.lit(snapshot).alias("snapshot"),
-            F.lit(input_snapshot).alias("input_snapshot"),
-            "file",
-            "rows",
-            F.lit(int(rows_in)).alias("rows_in"),
-            F.lit(int(wall_ms)).alias("wall_ms"),
-            F.lit(time.time()).alias("ts"),
-        )
-    )
-    import os
-
+    rows_in, wall_ms = int(rows_in), int(wall_ms)
+    files = [(f, n) for f, n in catalog.file_rows(data_path) if n]
+    ts = time.time()
+    rows = [
+        {
+            "stage": stage, "snapshot": snapshot, "input_snapshot": input_snapshot,
+            "file": f, "rows": n, "rows_in": rows_in, "wall_ms": wall_ms, "ts": ts,
+        }
+        for f, n in files
+    ]
     out = os.path.join(catalog.warehouse, "_metrics", f"{stage}-{snapshot}")
-    per_file.write.mode("overwrite").parquet(out)
-    return per_file
+    shutil.rmtree(out, ignore_errors=True)
+    os.makedirs(out)
+    pq.write_table(
+        pa.Table.from_pylist(rows, schema=_metrics_schema(rows_in, wall_ms)),
+        os.path.join(out, "part-00000.parquet"),
+    )
+    return sum(n for _, n in files)
 
 
 def read_metrics(spark: SparkSession, warehouse: str) -> DataFrame:
-    import os
-
     return (
         spark.read.option("basePath", os.path.join(warehouse, "_metrics"))
         .option("mergeSchema", "true")  # tolerate pre-rows_in history

@@ -12,7 +12,14 @@ Stage map (SURVEY.md §2):
   2. strings table    — explode name+aliases; norm = token-sorted UPPER
                         (so plain indel ratio(norm_a, norm_b) ≡ the
                         reference's token_sort_ratio(upper) — D1 predicate,
-                        deduplicate.py:149-160).
+                        deduplicate.py:149-160); distinct (norm, uid).
+                        ONE bounded collect of it (≤ cc_collect_threshold+1
+                        rows) picks the plan for stages 3-5.
+  3-5, small vocabulary (≤ pairwise_threshold distinct norms, rows fit):
+                        the driver builds exact-norm stars (D2), ratio ≥ 95
+                        checks every norm pair (D1) and closes the graph
+                        with union-find — all from the probe rows.
+  3-5, otherwise:
   3. exact edges      — star edges within equal-norm groups (D2).
   4. fuzzy edges      — LSH candidate pairs over DISTINCT norms + pandas-UDF
                         ratio ≥ 95 re-check (D1), mapped back to unit ids.
@@ -34,7 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.components import connected_components
+from ..functions.components import connected_components, union_find_local
 from ..functions.minhash import char_shingles, lsh_candidate_pairs
 from ..kernels.canonicalize import DEDUP_SIMILARITY, merge_entity_group
 from ..kernels.records import Entity
@@ -69,22 +76,63 @@ def collapse_exact(entity_mentions: DataFrame) -> DataFrame:
     )
 
 
-def similarity_edges(
-    units: DataFrame,
-    similarity: float = DEDUP_SIMILARITY,
-    pairwise_threshold: int = 300,
-) -> DataFrame:
-    """Stages 2-4: uid pairs whose any-name/alias similarity ≥ threshold."""
-    strings = units.select(
-        "uid",
-        F.explode(
-            F.array_distinct(F.array_union(F.array("name"), F.coalesce("aliases", F.array())))
-        ).alias("s"),
-    ).withColumn("norm", _norm_expr(F.col("s"))).filter(F.col("norm") != "")
+def _norm_uids(units: DataFrame) -> DataFrame:
+    """Stage 2: distinct (norm, uid) over every unit's name and aliases."""
+    return (
+        units.select(
+            "uid",
+            F.explode(
+                F.array_distinct(F.array_union(F.array("name"), F.coalesce("aliases", F.array())))
+            ).alias("s"),
+        )
+        .select(_norm_expr(F.col("s")).alias("norm"), "uid")
+        .filter(F.col("norm") != "")
+        .distinct()
+    )
+
+
+def _local_components(
+    norm_uid_rows: list, similarity: float = DEDUP_SIMILARITY
+) -> dict:
+    """Stages 3-5 on the driver: uid → component over collected (norm, uid).
+
+    Exact-norm groups are stars around their min uid (D2); every pair of
+    distinct norms is ratio-checked (D1) and joins the two groups' stars;
+    ``union_find_local`` closes the graph with the same min-uid labels the
+    distributed loop converges to. Uids without a non-empty norm are absent
+    (each is its own component).
+    """
+    import time
+
+    from ..kernels.similarity import ratio
+    from ..metrics import record_pairs
+
+    groups: dict[str, list[str]] = {}
+    for norm, uid in norm_uid_rows:
+        groups.setdefault(norm, []).append(uid)
+    hub = {norm: min(uids) for norm, uids in groups.items()}
+    links = [(hub[norm], uid) for norm, uids in groups.items() for uid in uids]
+    vals = sorted(groups)
+    t0 = time.perf_counter_ns()
+    links += [
+        (hub[a], hub[b])
+        for i, a in enumerate(vals)
+        for b in vals[i + 1 :]
+        if ratio(a, b) >= similarity * 100.0
+    ]
+    record_pairs(
+        "dedup_verify", len(vals) * (len(vals) - 1) // 2, time.perf_counter_ns() - t0
+    )
+    return union_find_local(links)
+
+
+def similarity_edges(units: DataFrame, similarity: float = DEDUP_SIMILARITY) -> DataFrame:
+    """Stages 3-4, distributed: uid pairs whose any-name/alias similarity ≥ threshold."""
+    norm_uid = _norm_uids(units)
 
     # exact: all uids sharing a norm form a star around the min uid (D2)
     exact = (
-        strings.groupBy("norm")
+        norm_uid.groupBy("norm")
         .agg(F.collect_set("uid").alias("uids"))
         .filter(F.size("uids") > 1)
         .select(
@@ -94,71 +142,42 @@ def similarity_edges(
         .filter(F.col("src") != F.col("dst"))
     )
 
-    # fuzzy: candidate pairs over DISTINCT norms + exact indel-ratio check (D1).
-    # Adaptive physical strategy: the distinct-norm set is the *entity
-    # vocabulary*, vastly smaller than the mention stream. When it fits a
-    # driver-side pairwise pass (≤ pairwise_threshold strings ⇒ ≤ ~45k ratio
-    # calls) that beats the LSH machinery's ~6 fixed shuffle jobs; above it,
-    # MinHash-LSH banding + a vectorized re-check UDF is the 10^12-row path.
-    norms = strings.select("norm").distinct()
-    # one bounded job decides the strategy AND fetches the data when small
-    # (limit short-circuits; a count() would materialize the whole distinct)
-    probe = norms.limit(pairwise_threshold + 1).collect()
-    if len(probe) <= pairwise_threshold:
+    # fuzzy: MinHash-LSH candidate pairs over DISTINCT norms + exact
+    # indel-ratio re-check (D1), mapped back to unit ids.
+    # b=16, r=8: S-curve center (1/16)^(1/8) ≈ 0.71. The 0.95 threshold is on
+    # the indel ratio, not on 3-shingle Jaccard: a one-edit pair of ~26-char
+    # names has Jaccard ≈ 0.78 and collides with probability ≈ 0.9
+    # (1-(1-0.78⁸)^16), so recall is below 1 for short near-duplicates.
+    # Sub-0.5-similar junk pairs collide ~50× less than the 32×4 banding
+    # would allow, keeping the python ratio-verify volume ∝ true near-matches.
+    norms = norm_uid.select("norm").distinct()
+    cand = lsh_candidate_pairs(
+        norms, "norm", char_shingles(F.col("norm"), 3), num_hashes=128, bands=16
+    )
+
+    from ..metrics import pair_accumulators
+
+    _pairs_acc, _ns_acc = pair_accumulators(units.sparkSession, "dedup_verify")
+
+    @F.pandas_udf("double")
+    def _ratio(a: pd.Series, b: pd.Series) -> pd.Series:
         import time as _time
 
-        from ..kernels.similarity import ratio as _ratio_fn
-        from ..metrics import record_pairs
+        from ..kernels.similarity import ratio
 
-        vals = sorted(r.norm for r in probe)
-        _t0 = _time.perf_counter_ns()
-        pairs = [
-            (a, b)
-            for i, a in enumerate(vals)
-            for b in vals[i + 1 :]
-            if _ratio_fn(a, b) >= similarity * 100.0
-        ]
-        record_pairs(
-            "dedup_verify", len(vals) * (len(vals) - 1) // 2,
-            _time.perf_counter_ns() - _t0,
-        )
-        verified = units.sparkSession.createDataFrame(
-            pairs, "id_a string, id_b string"
-        ) if pairs else units.sparkSession.createDataFrame([], "id_a string, id_b string")
-        # driver-created and ≤ threshold² rows — broadcast so the two
-        # norm→uid joins below are map-side (no exchange pair per join)
-        verified = F.broadcast(verified)
-    else:
-        # b=16, r=8: S-curve center (1/16)^(1/8) ≈ 0.71 — at the 0.95
-        # threshold recall ≈ 1−(1−0.95⁸)^16 ≈ 1-3e-8, while sub-0.5-similar
-        # junk pairs collide ~50× less than the 32×4 banding would allow,
-        # keeping the python ratio-verify volume ∝ true near-matches.
-        cand = lsh_candidate_pairs(
-            norms, "norm", char_shingles(F.col("norm"), 3), num_hashes=128, bands=16
-        )
+        t0 = _time.perf_counter_ns()
+        out = pd.Series([ratio(x, y) for x, y in zip(a, b)], dtype="float64")
+        _pairs_acc.add(len(a))
+        _ns_acc.add(_time.perf_counter_ns() - t0)
+        return out
 
-        from ..metrics import pair_accumulators
-
-        _pairs_acc, _ns_acc = pair_accumulators(units.sparkSession, "dedup_verify")
-
-        @F.pandas_udf("double")
-        def _ratio(a: pd.Series, b: pd.Series) -> pd.Series:
-            import time as _time
-
-            from ..kernels.similarity import ratio
-
-            t0 = _time.perf_counter_ns()
-            out = pd.Series([ratio(x, y) for x, y in zip(a, b)], dtype="float64")
-            _pairs_acc.add(len(a))
-            _ns_acc.add(_time.perf_counter_ns() - t0)
-            return out
-
-        verified = (
-            cand.withColumn("score", _ratio(F.col("id_a"), F.col("id_b")))
-            .filter(F.col("score") >= similarity * 100.0)
-            .select("id_a", "id_b")
-        )
-    norm_uid = strings.select("norm", "uid").distinct()
+    # nondeterministic: keeps the optimizer from inlining the UDF into the
+    # pushed-down filter and evaluating it a second time for the projection
+    verified = (
+        cand.withColumn("score", _ratio.asNondeterministic()(F.col("id_a"), F.col("id_b")))
+        .filter(F.col("score") >= similarity * 100.0)
+        .select("id_a", "id_b")
+    )
     fuzzy = (
         verified.join(norm_uid.withColumnRenamed("norm", "id_a").withColumnRenamed("uid", "src"), "id_a")
         .join(norm_uid.withColumnRenamed("norm", "id_b").withColumnRenamed("uid", "dst"), "id_b")
@@ -225,21 +244,41 @@ def canonicalize_units(
     pairwise_threshold: int = 300,
     cc_collect_threshold: int = 1_000_000,
 ) -> tuple[DataFrame, DataFrame]:
-    """D-phase from pre-collapsed units (shared by batch + incremental paths)."""
+    """D-phase from pre-collapsed units (shared by batch + incremental paths).
+
+    One bounded collect of the (norm, uid) table picks the physical plan:
+    when it holds ≤ ``cc_collect_threshold`` rows over ≤ ``pairwise_threshold``
+    distinct norms (≤ ~45k ratio calls), the driver computes the components
+    from those rows (``_local_components``) — no edge table, no second probe.
+    Above either bound the distributed path runs: LSH edges
+    (``similarity_edges``) and ``connected_components``.
+    """
     # units feeds three consumers (similarity edges, merge, mapping) and the
-    # CC loop forces several actions — cache to avoid re-aggregating mentions.
+    # strategy probe forces an action — cache to avoid re-aggregating mentions.
     units = units.cache()
-    edges = similarity_edges(units, similarity, pairwise_threshold)
-    cc_info: dict = {}
-    comp = connected_components(
-        edges, src="src", dst="dst", collect_threshold=cc_collect_threshold,
-        out_info=cc_info,
+    spark = units.sparkSession
+    # one bounded collect sizes the table and, when it is small, IS the data
+    probe = _norm_uids(units).limit(cc_collect_threshold + 1).collect()
+    driver_path = (
+        len(probe) <= cc_collect_threshold
+        and len({r.norm for r in probe}) <= pairwise_threshold
     )
+    if driver_path:
+        comp_r = spark.createDataFrame(
+            list(_local_components(probe, similarity).items()),
+            "uid string, component string",
+        )
+    else:
+        cc_info: dict = {}
+        comp_r = connected_components(
+            similarity_edges(units, similarity), src="src", dst="dst",
+            collect_threshold=cc_collect_threshold, out_info=cc_info,
+        ).withColumnRenamed("id", "uid")
+        driver_path = cc_info["driver_path"]
     # driver-path component tables are ≤ cc_collect_threshold rows by
     # construction — broadcast them so the units join is map-side (AQE could
     # only discover this after materializing both shuffle sides)
-    comp_r = comp.withColumnRenamed("id", "uid")
-    if cc_info.get("driver_path"):
+    if driver_path:
         comp_r = F.broadcast(comp_r)
     units_c = units.join(comp_r, "uid", "left").withColumn(
         "component", F.coalesce("component", "uid")
@@ -280,7 +319,7 @@ def canonicalize_units(
     )
     merged = merged.cache()
     canon = merged.select(F.col("component"), F.col("name").alias("canonical"))
-    if cc_info.get("driver_path"):
+    if driver_path:
         # |merged with component| ≤ |CC vertices| ≤ cc_collect_threshold:
         # broadcast the 2-col canonical dictionary, skipping two exchanges
         canon = F.broadcast(canon)

@@ -202,9 +202,12 @@ def score_image_entities(
         )
         pairs = cand.join(imgs, ["url", "path", "context"]).join(ents, "entity")
 
+    # nondeterministic: keeps the optimizer from inlining the UDF into the
+    # pushed-down filter and scoring every pair a second time for the
+    # projection
     scored = pairs.withColumn(
         "score",
-        _relevance_udf(images.sparkSession)(
+        _relevance_udf(images.sparkSession).asNondeterministic()(
             F.col("terms"), F.col("caption"), F.col("texts")
         ),
     ).filter(F.col("score") >= IMAGE_MIN_RELEVANCE)

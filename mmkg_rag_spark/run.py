@@ -25,8 +25,8 @@ from pyspark.sql import functions as F
 
 
 # snapshot fingerprint → row count, so each stage's metrics row can carry
-# its upstream's rows_in without an extra count job (the count below is
-# printed anyway; resumed snapshots pay one parquet-stats count)
+# its upstream's rows_in; counts come from the snapshots' parquet footers,
+# never from a count job
 _STAGE_ROWS: dict[str, int] = {}
 
 
@@ -35,23 +35,22 @@ def _stage(catalog, name, snap, input_snap, compute, force=False):
     t0 = time.time()
     if not force and catalog.has_snapshot(name, snap):
         print(f"[resume] {name} snap-{snap}: exists, skipping compute")
-        out = catalog.read(name, snap)
-        _STAGE_ROWS[snap] = out.count()
-        return out
+        _STAGE_ROWS[snap] = sum(
+            n for _, n in catalog.file_rows(catalog.snapshot_dir(name, snap))
+        )
+        return catalog.read(name, snap)
     df = compute()
     path = catalog.write(df, name, snap, meta={"input": input_snap})
     wall_ms = int((time.time() - t0) * 1000)
     from mmkg_rag_spark.metrics import record_stage
 
-    record_stage(
+    n = record_stage(
         catalog, name, snap, input_snap, path, wall_ms,
         rows_in=_STAGE_ROWS.get(input_snap, -1),
     )
-    out = catalog.read(name, snap)
-    n = out.count()
     _STAGE_ROWS[snap] = n
     print(f"[run   ] {name} snap-{snap}: {n} rows in {wall_ms} ms")
-    return out
+    return catalog.read(name, snap)
 
 
 def main(argv: list[str] | None = None) -> int:

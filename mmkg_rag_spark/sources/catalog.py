@@ -25,10 +25,13 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import pathlib
 import time
 from typing import Any
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def fingerprint(*parts: Any) -> str:
@@ -69,12 +72,15 @@ class ParquetCatalog:
     def has_snapshot(self, table: str, snap: str) -> bool:
         return any(s["id"] == snap for s in self._load_manifest(table))
 
-    def _commit(self, table: str, snap: str, path: str, meta: dict | None) -> None:
+    def _commit(
+        self, table: str, snap: str, path: str, meta: dict | None, schema: StructType
+    ) -> None:
         """Append a manifest entry with a monotonic sequence number.
 
         ``seq`` (append order) — not wall-clock ts — defines "latest":
         same-tick or skewed clocks can tie/invert ``ts``, which would make
         the streaming incremental path fold onto a stale graph (ADVICE r1).
+        ``schema`` is stored so that ``read`` needs no inference job.
         """
         manifest = [s for s in self._load_manifest(table) if s["id"] != snap]
         seq = 1 + max((s.get("seq", 0) for s in manifest), default=0)
@@ -85,6 +91,7 @@ class ParquetCatalog:
                 "ts": time.time(),
                 "path": path,
                 **(meta or {}),
+                "schema": schema.jsonValue(),
             }
         )
         self._save_manifest(table, manifest)
@@ -93,7 +100,7 @@ class ParquetCatalog:
         """Materialize df as snapshot ``snap`` of ``table``; returns data dir."""
         path = self.snapshot_dir(table, snap)
         df.write.mode("overwrite").parquet(path)
-        self._commit(table, snap, path, meta)
+        self._commit(table, snap, path, meta, df.schema)
         return path
 
     def write_all(
@@ -115,20 +122,38 @@ class ParquetCatalog:
             path = self.snapshot_dir(table, snap)
             df.write.mode("overwrite").parquet(path)
             paths[table] = path
-        for table, path in paths.items():
-            self._commit(table, snap, path, meta)
+        for df, table in writes:
+            self._commit(table, snap, paths[table], meta, df.schema)
         return paths
 
-    def read(self, table: str, snap: str | None = None) -> DataFrame:
-        """Read a snapshot (default: latest committed = highest seq)."""
-        manifest = self._load_manifest(table)
+    def _entry(self, table: str, snap: str | None, exclude: str | None = None) -> dict:
+        manifest = [s for s in self._load_manifest(table) if s["id"] != exclude]
         if not manifest:
             raise FileNotFoundError(f"no snapshots for table {table}")
         if snap is None:
-            entry = max(manifest, key=lambda s: (s.get("seq", 0), s["ts"]))
-        else:
-            entry = next(s for s in manifest if s["id"] == snap)
-        return self.spark.read.parquet(entry["path"])
+            return max(manifest, key=lambda s: (s.get("seq", 0), s["ts"]))
+        return next(s for s in manifest if s["id"] == snap)
+
+    def read(
+        self, table: str, snap: str | None = None, *, exclude: str | None = None
+    ) -> DataFrame:
+        """Read a snapshot (default: latest committed = highest seq, skipping
+        snapshot ``exclude``). Entries that store their schema read without a
+        schema-inference job; older entries infer it from the files."""
+        entry = self._entry(table, snap, exclude)
+        reader = self.spark.read
+        if "schema" in entry:
+            reader = reader.schema(StructType.fromJson(entry["schema"]))
+        return reader.parquet(entry["path"])
+
+    def file_rows(self, path: str) -> list[tuple[str, int]]:
+        """(file URI, rows) per data file of a snapshot directory, from the
+        parquet footers — no Spark job. URIs have ``input_file_name()``'s
+        ``file:///…`` form."""
+        return [
+            (pathlib.Path(f).absolute().as_uri(), pq.read_metadata(f).num_rows)
+            for f in sorted(self._data_files(path))
+        ]
 
     def snapshots(self, table: str) -> list[dict]:
         return self._load_manifest(table)
@@ -163,13 +188,7 @@ class ParquetCatalog:
         one full-shuffle alternative (repartition) buys nothing here.
         Returns stats {files_before, files_after, bytes, snapshot}.
         """
-        manifest = self._load_manifest(table)
-        if not manifest:
-            raise FileNotFoundError(f"no snapshots for table {table}")
-        if snap is None:
-            entry = max(manifest, key=lambda s: (s.get("seq", 0), s["ts"]))
-        else:
-            entry = next(s for s in manifest if s["id"] == snap)
+        entry = self._entry(table, snap)
         files = self._data_files(entry["path"])
         total = sum(os.path.getsize(f) for f in files)
         n_out = max(1, -(-total // target_file_bytes))
@@ -183,7 +202,7 @@ class ParquetCatalog:
                 "compacted": False,
             }
         new_snap = fingerprint("compact", entry["id"], target_file_bytes)
-        df = self.spark.read.parquet(entry["path"]).coalesce(int(n_out))
+        df = self.read(table, entry["id"]).coalesce(int(n_out))
         path = self.snapshot_dir(table, new_snap)
         df.write.mode("overwrite").parquet(path)
         self._commit(
@@ -191,6 +210,7 @@ class ParquetCatalog:
             new_snap,
             path,
             {"compacted_from": entry["id"], "files_before": len(files)},
+            df.schema,
         )
         return {
             "table": table,

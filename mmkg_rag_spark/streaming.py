@@ -72,16 +72,17 @@ def process_pages_batch(
     ).localCheckpoint()
     em, rm = split_mentions(mentions)
 
+    # the graph as it stood before this batch: a replay after a torn commit
+    # must neither fold onto its own partial output nor read the snapshot
+    # directory it is about to overwrite
     prior_nodes = prior_edges = None
     try:
-        prior_nodes = catalog.read("nodes")
-        prior_edges = catalog.read("edges")
+        prior_nodes = catalog.read("nodes", exclude=snap)
+        prior_edges = catalog.read("edges", exclude=snap)
     except FileNotFoundError:
         pass
 
     nodes, _, edges = incremental_canonicalize(em, rm, prior_nodes, prior_edges)
-    nodes = nodes.localCheckpoint()
-    edges = edges.localCheckpoint()
     paths = catalog.write_all(
         [(nodes, "nodes"), (edges, "edges")], snap, meta={"batch_id": batch_id}
     )
@@ -90,14 +91,9 @@ def process_pages_batch(
     from .metrics import record_stage
 
     wall = int((time.time() - t0) * 1000)
-    record_stage(catalog, "stream-nodes", snap, f"batch-{batch_id}", n_path, wall)
-    record_stage(catalog, "stream-edges", snap, f"batch-{batch_id}", e_path, wall)
-    return {
-        "batch_id": batch_id,
-        "nodes": nodes.count(),
-        "edges": edges.count(),
-        "skipped": 0,
-    }
+    n_nodes = record_stage(catalog, "stream-nodes", snap, f"batch-{batch_id}", n_path, wall)
+    n_edges = record_stage(catalog, "stream-edges", snap, f"batch-{batch_id}", e_path, wall)
+    return {"batch_id": batch_id, "nodes": n_nodes, "edges": n_edges, "skipped": 0}
 
 
 def stream_build(

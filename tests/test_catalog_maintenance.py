@@ -92,3 +92,49 @@ def test_compact_plan_is_narrow_no_shuffle(spark, tmp_path):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "Coalesce" in plan
+
+
+def test_stored_schema_roundtrip_and_legacy_manifest(spark, tmp_path):
+    """Snapshots store their schema, so ``read`` runs no schema-inference
+    job and yields exactly the inferred schema and rows; a manifest entry
+    written without the key still reads by inference."""
+    cat = _cat(spark, tmp_path)
+    nodes = spark.createDataFrame(
+        [("Ada", "PERSON", "d", ["A"], ["r"], [1, 2]), ("Bob", "ORG", "e", [], [], [])],
+        "name string, label string, description string, "
+        "aliases array<string>, references array<string>, chunks array<int>",
+    )
+    edges = spark.createDataFrame(
+        [("Ada", "knows", "Bob", "d", ["r"], [3])],
+        "source string, label string, target string, description string, "
+        "references array<string>, chunks array<int>",
+    )
+    cat.write_all([(nodes, "nodes"), (edges, "edges")], "s1")
+    sc = spark.sparkContext
+
+    def read_jobs(table, group):
+        sc.setJobGroup(group, "catalog read")
+        try:
+            df = cat.read(table)
+        finally:
+            sc.setJobGroup("default", "")
+        return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    inferred = {}
+    for table, df in (("nodes", nodes), ("edges", edges)):
+        entry = cat.snapshots(table)[0]
+        assert "schema" in entry
+        inferred[table] = spark.read.parquet(entry["path"]).schema
+        got, jobs = read_jobs(table, f"read-{table}")
+        assert jobs == 0
+        assert got.schema == inferred[table]
+        assert sorted(got.collect()) == sorted(df.collect())
+
+    manifest = cat._load_manifest("nodes")
+    for e in manifest:
+        del e["schema"]
+    cat._save_manifest("nodes", manifest)
+    legacy, jobs = read_jobs("nodes", "read-legacy")
+    assert jobs > 0  # schema inferred from the files
+    assert legacy.schema == inferred["nodes"]
+    assert sorted(legacy.collect()) == sorted(nodes.collect())

@@ -62,6 +62,64 @@ def test_small_and_distributed_paths_agree(mentions):
     assert len(names) == 3 and "Grace Hopper" in names and "Acme Systems" in names
 
 
+FUSED_MENTIONS = [
+    # one exact-norm group of three uids (token order and case differ)
+    ("u1", 1, "Marie Curie", "PERSON", "physicist", [], ["r1"]),
+    ("u2", 1, "CURIE MARIE", "PERSON", "chemist", [], []),
+    ("u3", 2, "marie curie", "ORG", "institute", ["Curie Institute"], []),
+    # fuzzy pairs: one edit apart, ratio ≥ 95 but unequal norms
+    ("u4", 1, "International Business Machines Corporation", "ORG", "it", [], []),
+    ("u5", 1, "International Business Machine Corporation", "ORG", "ibm", [], []),
+    ("u6", 3, "Royal Netherlands Meteorological Institute", "ORG", "knmi", [], []),
+    ("u7", 3, "Royal Netherland Meteorological Institute", "ORG", "weather", [], []),
+    # an alias bridging two norm groups: u10's name joins u8's norm, its
+    # alias joins u9's, so all three close into one component
+    ("u8", 1, "Charles Babbage", "PERSON", "mathematician", [], []),
+    ("u9", 1, "Father of the Computer", "PERSON", "title", [], []),
+    ("u10", 2, "Babbage Charles", "PERSON", "engine designer", ["father of the computer"], []),
+    ("u11", 1, "Grace Hopper", "PERSON", "compilers", ["Amazing Grace"], []),
+]
+
+
+def _full_sets(nodes, mapping):
+    n = {
+        (r.name, r.label, r.description, tuple(r.aliases), tuple(r.references), tuple(r.chunks))
+        for r in nodes.collect()
+    }
+    return n, {(r.member, r.canonical) for r in mapping.collect()}
+
+
+def test_fused_driver_path_equals_distributed_path(spark, monkeypatch):
+    """The small-vocabulary D-phase runs from its single (norm, uid) probe:
+    no edge table, no components probe — and its nodes and mapping equal
+    the forced LSH + iterative-CC path's, including on empty input."""
+    from mmkg_rag_spark.operators import dedup
+
+    def _unreached(*a, **k):
+        raise AssertionError("fused path built the distributed edges")
+
+    results = []
+    for rows in (FUSED_MENTIONS, []):
+        mentions = spark.createDataFrame(rows, SCHEMA)
+        slow = _full_sets(*canonicalize_entities(
+            mentions, pairwise_threshold=0, cc_collect_threshold=0
+        ))
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "similarity_edges", _unreached)
+            m.setattr(dedup, "connected_components", _unreached)
+            fast = _full_sets(*canonicalize_entities(mentions))
+        assert fast == slow
+        results.append(fast)
+
+    (nodes, mapping), empty = results
+    assert empty == (set(), set())
+    canon = dict(mapping)
+    # the bridge closed u8, u9, u10 into one node; both fuzzy pairs merged
+    bridged = {canon.get(n, n) for n in ("Charles Babbage", "Father of the Computer", "Babbage Charles")}
+    assert len(bridged) == 1
+    assert len(nodes) == 5
+
+
 def test_connected_components_both_paths(spark):
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("d", "e"), ("f", "f")],

@@ -228,6 +228,9 @@ def test_streaming_commit_crash_idempotence(spark, tmp_path):
     out = process_pages_batch(spark, torn, pages1, batch_id=1)  # replay
     assert out["skipped"] == 0  # recomputed, NOT skipped
     assert torn.has_snapshot("edges", snap1)
+    # the returned counts (parquet footers) are the committed graph's
+    assert out["nodes"] == torn.read("nodes").count() > 0
+    assert out["edges"] == torn.read("edges").count() > 0
 
     def rows(cat, table):
         return {

@@ -60,3 +60,29 @@ def test_blocked_equals_broadcast_on_accepted_links(spark):
         score_image_entities(described, nodes, strategy="blocked", salt_buckets=4)
     )
     assert capped.count() > 0
+
+
+def test_relevance_scored_once_per_candidate_pair(spark):
+    """The relevance UDF appears once in the physical plan: the pair
+    accumulator equals the candidate-pair count (|images| x |entities| on
+    the broadcast path), not twice it."""
+    from mmkg_rag_spark import metrics
+
+    images = spark.createDataFrame(
+        [
+            ("u1", "a.png", "c", "Ada Lovelace at work", ["Ada"], "d"),
+            ("u1", "b.png", "c", "Grace Hopper", [], "d"),
+            ("u2", "c.png", "c", "", ["Analytical Engine"], "d"),
+        ],
+        "url string, path string, context string, caption string, "
+        "texts array<string>, description string",
+    )
+    entities = spark.createDataFrame(
+        [("Ada Lovelace", ["Ada"]), ("Grace Hopper", []),
+         ("Analytical Engine", []), ("Acme", [])],
+        "name string, aliases array<string>",
+    )
+    metrics._PAIR_SITES.clear()
+    top = score_image_entities(images, entities, strategy="broadcast").collect()
+    assert top
+    assert metrics.similarity_throughput()["mmodal_relevance"]["pairs"] == 3 * 4

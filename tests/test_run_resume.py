@@ -110,6 +110,48 @@ def test_metrics_lineage_rows(spark, tmp_path_factory):
     assert all(r.rows_in == -1 for r in rows if r.stage == "pages")
 
 
+def test_record_stage_rows_match_file_rescan(spark, tmp_path_factory):
+    """Footer row counts per data file equal the ``input_file_name()``
+    re-scan they replace: same ``file:///`` URIs, no row for a zero-row
+    file, and the snapshot total comes back."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from mmkg_rag_spark.metrics import read_metrics, record_stage
+    from mmkg_rag_spark.sources.catalog import ParquetCatalog
+
+    wh = str(tmp_path_factory.mktemp("wh5"))
+    cat = ParquetCatalog(spark, wh)
+    path = cat.write(spark.range(100).repartition(3), "t", "s1")
+    pq.write_table(
+        pa.table({"id": pa.array([], pa.int64())}),
+        os.path.join(path, "part-99999-empty.parquet"),
+    )
+    assert record_stage(cat, "t", "s1", "-", path, 7) == 100
+    # history written by the earlier Spark-job implementation still merges
+    spark.range(1).select(
+        F.lit("old").alias("stage"), F.lit("s0").alias("snapshot"),
+        F.lit("-").alias("input_snapshot"), F.lit("f").alias("file"),
+        F.count(F.lit(1)).alias("rows"), F.lit(-1).alias("rows_in"),
+        F.lit(5).alias("wall_ms"), F.lit(0.0).alias("ts"),
+    ).write.parquet(os.path.join(wh, "_metrics", "old-s0"))
+
+    got = {
+        (r.file, r.rows)
+        for r in read_metrics(spark, wh).filter("stage = 't'").collect()
+    }
+    want = {
+        (r.file, r["count"])
+        for r in spark.read.parquet(path)
+        .groupBy(F.input_file_name().alias("file"))
+        .count()
+        .collect()
+    }
+    assert got == want and len(got) == 3
+    assert all(f.startswith("file:///") for f, _ in got)
+
+
 def test_catalog_manifest_roundtrip(spark, tmp_path_factory):
     from mmkg_rag_spark.sources.catalog import ParquetCatalog, fingerprint
 

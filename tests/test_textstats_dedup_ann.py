@@ -154,11 +154,13 @@ def test_similarity_throughput_accounting(spark, docs):
         .withColumn("chunk_id", F.lit(1))
         .withColumn("images", F.array())
     )
-    # pairwise_threshold=0 forces the distributed (UDF) path
-    dedup.similarity_edges(units, pairwise_threshold=0).collect()
+    # similarity_edges is the distributed (UDF) path
+    dedup.similarity_edges(units).collect()
     tp = metrics.similarity_throughput()
     assert "dedup_verify" in tp
-    assert tp["dedup_verify"]["pairs"] > 0
+    # the near-identical pair is the only LSH candidate, and the ratio UDF
+    # scores each candidate once
+    assert tp["dedup_verify"]["pairs"] == 1
     assert tp["dedup_verify"]["pairs_per_sec_per_core"] is None or (
         tp["dedup_verify"]["pairs_per_sec_per_core"] > 0
     )

@@ -5,8 +5,8 @@ the link-scoring join; the generated corpus already plants one head entity
 in ~10% of pages (sources/pages.py:125) plus an ~8% image-bearing slice.
 This tool builds the mention/image tables from such a corpus, then runs
 
-  - D1: similarity_edges with the MinHash-LSH band + vectorized verify
-    path forced (pairwise_threshold=0), and
+  - D1: similarity_edges (the MinHash-LSH band + vectorized verify
+    path), and
   - M4: score_image_entities with the salted token-blocked join forced
     (strategy="blocked"),
 
@@ -126,7 +126,7 @@ def main() -> int:
 
     # --- D1: LSH banding + vectorized verify, scale path forced ---
     sc.setJobGroup("d1_lsh_verify", "similarity_edges LSH path")
-    edges = similarity_edges(units, pairwise_threshold=0)
+    edges = similarity_edges(units)
     n_sim_edges = edges.count()
     sc.setJobGroup("default", "")
 
